@@ -73,12 +73,13 @@ object QueryProfile {
         s"${stages.size} stages ==")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"tasks"}%6s " +
         f"${"run_ms"}%8s ${"cpu_ms"}%8s ${"shR_mb"}%7s ${"shW_mb"}%7s " +
-        f"${"in_mb"}%7s ${"spill_mb"}%8s  name")
+        f"${"in_mb"}%7s ${"spill_mb"}%8s ${"deser_ms"}%8s ${"gc_ms"}%5s" +
+        "  name")
       stages.sortBy(-_.wallMs).take(30).foreach { s =>
         println(f"${s.id}%6d ${s.wallMs}%8d ${s.tasks}%6d " +
           f"${s.runMs}%8d ${s.cpuMs}%8d ${s.shRead / 1048576}%7d " +
           f"${s.shWrite / 1048576}%7d ${s.input / 1048576}%7d " +
-          f"${s.spill / 1048576}%8d ${s.deserMs}%6d ${s.gcMs}%5d" +
+          f"${s.spill / 1048576}%8d ${s.deserMs}%8d ${s.gcMs}%5d" +
           f"  ${s.name}")
       }
       val sumWall = stages.map(_.wallMs).sum

@@ -45,9 +45,19 @@ object Catalog {
     case t => throw new IllegalArgumentException(s"unknown type $t")
   }
 
+  /** Spark schema of a model. Time/date fields carry a `graft.nowType`
+    * METADATA marker: ns stamps are plain longs in Spark, and the marker
+    * is what lets the binary wire mode frame them with the reference's
+    * TIME tag instead of INT (Wire.respondBinary). Metadata rides
+    * attribute references through projections/aliases, so plain
+    * `select stamp` keeps it. */
   def schemaOf(props: Seq[Prop]): StructType =
-    StructType(props.map(p =>
-      StructField(p.name, sparkType(p.typ), nullable = !p.pk)))
+    StructType(props.map { p =>
+      val md = new MetadataBuilder()
+      if (p.typ == "time" || p.typ == "date")
+        md.putString("graft.nowType", p.typ)
+      StructField(p.name, sparkType(p.typ), nullable = !p.pk, md.build())
+    })
 
   /** One scope's metadata; mutable, flushed to TSV on every DDL. */
   class Scope(val name: String, val dir: Path) {

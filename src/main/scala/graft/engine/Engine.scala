@@ -6,7 +6,7 @@ import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.catalog.Catalog
 import graft.catalog.Catalog.{Prop, Scope}
@@ -574,10 +574,6 @@ class Engine(val spark: SparkSession, root: String,
       case _ => false
     })
 
-  /** DataFrame for a table: attached > scope catalog (empty-with-schema
-    * when no data has been written yet). Stamped edge tables carry the
-    * hidden `stamp_date` hive-partition column (dropped by projection,
-    * used by period pruning). */
   /** Per-statement CTE bindings (WITH … AS): name → built frame.
     * Thread-local so concurrent sessions on one engine can't see each
     * other's bindings; saved/restored around each WITH statement. */
@@ -1288,36 +1284,40 @@ class Engine(val spark: SparkSession, root: String,
     }
   }
 
-  def tableDf(table: String): DataFrame =
+  /** A CTE binding, attached table or stored view of that name — the
+    * names that shadow scope tables, in shadowing order. */
+  private def boundDf(table: String): Option[DataFrame] =
     cteBindings.get.get(table.toLowerCase)
       .orElse(attached.get(table.toLowerCase))
       .orElse(resolveView(table).map { case (vn, vsql) => viewDf(vn, vsql) })
-      .getOrElse {
-      val s = scope
-      val (kind, name) = s.resolve(table).getOrElse(
-        throw new IllegalArgumentException(s"unknown table $table"))
-      val props = s.propsOf(name)
-      val dir = s.tableDir(name)
-      val df0 =
-        if (Files.exists(dir)) {
-          if (isStampedEdge(name)) spark.read.parquet(dir.toString)
-          else spark.read.schema(Catalog.schemaOf(props))
-            .parquet(dir.toString)
-        } else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], Catalog.schemaOf(props))
-      // tag time/date columns in the schema METADATA: ns stamps are
-      // plain longs in Spark, and this marker is what lets the binary
-      // wire mode frame them with the reference's TIME tag instead of
-      // INT (Wire.respondBinary). Metadata rides attribute references
-      // through projections/aliases, so plain `select stamp` keeps it.
-      props.filter(p => p.typ == "time" || p.typ == "date")
-        .foldLeft(df0) { (df, p) =>
-          if (df.columns.contains(p.name))
-            df.withMetadata(p.name, new org.apache.spark.sql.types
-              .MetadataBuilder().putString("graft.nowType", p.typ).build())
-          else df
-        }
-    }
+
+  /** A scope table's canonical name and stored schema: the catalog
+    * model plus, on stamped edges, the `stamp_date` day partition. */
+  private def scopeSchema(table: String): (String, StructType) = {
+    val s = scope
+    val (_, name) = s.resolve(table).getOrElse(
+      throw new IllegalArgumentException(s"unknown table $table"))
+    val model = Catalog.schemaOf(s.propsOf(name))
+    (name, if (isStampedEdge(name)) model.add("stamp_date", DateType)
+           else model)
+  }
+
+  /** A table's frame. Scope tables read with their declared schema:
+    * no footer-reading inference job, and a stamped edge emptied by
+    * DELETE (a snapshot dir without partition dirs) reads as zero rows.
+    * Each call lists the table's files; name probes use `columnsOf`. */
+  def tableDf(table: String): DataFrame = boundDf(table).getOrElse {
+    val (name, schema) = scopeSchema(table)
+    val dir = scope.tableDir(name)
+    if (Files.exists(dir)) spark.read.schema(schema).parquet(dir.toString)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
+
+  /** A table's column names, read from the catalog for scope tables
+    * instead of building (and so listing) their frame. */
+  private def columnsOf(table: String): Seq[String] =
+    boundDf(table).fold(scopeSchema(table)._2.fieldNames.toSeq)(
+      _.columns.toSeq)
 
   /** Serialize all writers of one table across sessions — the same
     * registry lock the PK-checked vertex insert takes. Appends must
@@ -1333,8 +1333,10 @@ class Engine(val spark: SparkSession, root: String,
 
   /** Central table writer: stamped edges are stored hive-partitioned
     * by UTC day of their stamp — the lakehouse analog of the
-    * reference's per-file time periods (store.h:172); stamp-range
-    * queries then prune whole days before listing files. */
+    * reference's per-file time periods (store.h:172). Building a read
+    * frame still lists every day directory (InMemoryFileIndex); a
+    * stamp-range query then skips the other days' files at scan
+    * planning. */
   private def writeTable(name: String, df: DataFrame, dir: String,
                          mode: String): Unit =
     if (isStampedEdge(name))
@@ -2125,7 +2127,7 @@ class Engine(val spark: SparkSession, root: String,
     * swallowed — genuine errors (OOM, interrupts) propagate
     * (advice finding: a blanket Throwable catch masked them). */
   private def tryColsOf(t: String): Option[Set[String]] =
-    try Some(tableDf(t).columns.map(_.toLowerCase).toSet)
+    try Some(columnsOf(t).map(_.toLowerCase).toSet)
     catch {
       // NonFatal: any resolution failure (bad name, broken stored
       // view re-parsed via resolveView → ParseError, unreadable
@@ -2237,14 +2239,14 @@ class Engine(val spark: SparkSession, root: String,
         .map(a => (a.alias.getOrElse(a.table), a.table))
     val innerColsByAlias: Seq[(String, Set[String])] =
       innerTables.map { case (a, t) =>
-        a -> tableDf(t).columns.map(_.toLowerCase).toSet }
+        a -> columnsOf(t).map(_.toLowerCase).toSet }
     val innerAliases: Set[String] =
       innerTables.map(_._1.toLowerCase).toSet
     val innerCols: Set[String] = innerColsByAlias.flatMap(_._2).toSet
     val outers: Set[String] = outerQualifiers(outerSel) -- innerAliases
     val outerBase: String = outerSel.fromAlias.getOrElse(outerSel.from.get)
     val outerBaseCols: Set[String] =
-      tableDf(outerSel.from.get).columns.map(_.toLowerCase).toSet
+      columnsOf(outerSel.from.get).map(_.toLowerCase).toSet
     val innerCtx: ExprBuilder.Ctx = innerTables.flatMap { case (a, t) =>
       val tc = typeCtx(t)
       tc ++ tc.map { case (k, v) => s"${a.toLowerCase}.$k" -> v }
@@ -2817,7 +2819,7 @@ class Engine(val spark: SparkSession, root: String,
     // the legacy context INSERT applies on the way in.
     val sel = sel0.from match {
       case Some(t) if isStampedEdge(t) &&
-          !tableDf(t).columns.exists(_.equalsIgnoreCase("timestamp")) =>
+          !columnsOf(t).exists(_.equalsIgnoreCase("timestamp")) =>
         val m: Map[String, Expr] = Map("timestamp" -> Field("stamp"))
         def rf(f: Field): Field =
           if (f.qualifier.isEmpty && f.name.equalsIgnoreCase("timestamp"))
@@ -2936,8 +2938,9 @@ class Engine(val spark: SparkSession, root: String,
     val filtered0 = where.fold(df)(df.filter)
     // period pruning (reference expr_period, fun/expr.c:1578-1631):
     // extract the [start,end] stamp bounds from the WHERE conjunction
-    // and add the equivalent stamp_date partition predicate, so whole
-    // days are pruned before any file is listed.
+    // and add the equivalent stamp_date partition predicate. The frame
+    // build above already listed every day directory; this predicate
+    // makes scan planning skip the files of days outside the range.
     val filtered =
       if (isStampedEdge(fromName) && residualWhere.isDefined
           && df.columns.contains("stamp_date"))
@@ -2958,7 +2961,7 @@ class Engine(val spark: SparkSession, root: String,
       val base = current match {
         case Some(sc) if sc.resolve(fromName).isDefined =>
           sc.propsOf(fromName).map(p => col(s"$fromAlias.${p.name}"))
-        case _ => tableDf(fromName).columns.toSeq
+        case _ => columnsOf(fromName)
           .map(c => col(s"$fromAlias.$c"))
       }
       base ++ sel.joins.flatMap { j =>
@@ -2973,7 +2976,7 @@ class Engine(val spark: SparkSession, root: String,
         if (aj.generated) Seq.empty
         else {
           val aAlias = aj.alias.getOrElse(aj.table)
-          tableDf(aj.table).columns.toSeq.map(c => col(s"$aAlias.$c"))
+          columnsOf(aj.table).map(c => col(s"$aAlias.$c"))
         }
       }
     }

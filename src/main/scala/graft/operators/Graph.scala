@@ -234,6 +234,18 @@ object Graph {
     ranks
   }
 
+  /** Release a frame's persisted blocks once nothing reads it. A
+    * localCheckpoint persists its RDD directly, outside the
+    * CacheManager, so `Dataset.unpersist` leaves those blocks until the
+    * ContextCleaner runs; the checkpointed frame's plan root is the
+    * LogicalRDD over that RDD. */
+  private[graft] def retire(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => df.unpersist(blocking = false)
+    }
+
   /** Multi-source BFS hop distances over an undirected edge list:
     * (v, dist) with dist = fewest hops from any seed, bounded by
     * `maxHops`. Frontier-at-a-time expansion — each round is one
@@ -257,9 +269,10 @@ object Graph {
         struct(col(dst).as("u"), col(src).as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .localCheckpoint()
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var visited = seeds.select(col(seedCol).as("v")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
+    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame](sym)
+    def held(df: DataFrame): DataFrame = { roundCaches += df; df }
+    var visited = held(seeds.select(col(seedCol).as("v")).distinct()
+      .withColumn("dist", lit(0L)).localCheckpoint())
     var frontier = visited.select(col("v"))
     var hop = 1L
     var done = false
@@ -291,17 +304,17 @@ object Graph {
       if (hop < maxHops && maxHops > 6 && next.isEmpty) done = true
       else {
         val grown = visited.unionAll(next)
-        visited = if (hop % 4 == 0) grown.localCheckpoint() else grown
+        visited = if (hop % 4 == 0) held(grown.localCheckpoint()) else grown
         frontier = next.select(col("v"))
       }
       hop += 1
     }
     // seal: materialize the (vertex-count-sized) result once, then
-    // release every round cache — otherwise each call pins maxHops
-    // MEMORY_AND_DISK frames for the application lifetime (the
+    // release every checkpoint the walk took — otherwise each call pins
+    // maxHops MEMORY_AND_DISK frames for the application lifetime (the
     // long-lived wire Server would accumulate them indefinitely)
     val out = visited.localCheckpoint(true)
-    roundCaches.foreach(_.unpersist(blocking = false))
+    roundCaches.foreach(retire)
     out
   }
 
@@ -324,10 +337,11 @@ object Graph {
         struct(col(dst).as("u"), col(src).as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .localCheckpoint()
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var visited = seeds.select(col(seedCol).as("seed")).distinct()
+    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame](sym)
+    def held(df: DataFrame): DataFrame = { roundCaches += df; df }
+    var visited = held(seeds.select(col(seedCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("v"))
-      .withColumn("dist", lit(0L)).localCheckpoint()
+      .withColumn("dist", lit(0L)).localCheckpoint())
     var frontier = visited.select(col("seed"), col("v"))
     var hop = 1L
     var done = false
@@ -343,13 +357,13 @@ object Graph {
       if (hop < maxHops && maxHops > 6 && next.isEmpty) done = true
       else {
         val grown = visited.unionAll(next)
-        visited = if (hop % 4 == 0) grown.localCheckpoint() else grown
+        visited = if (hop % 4 == 0) held(grown.localCheckpoint()) else grown
         frontier = next.select(col("seed"), col("v"))
       }
       hop += 1
     }
     val out = visited.localCheckpoint(true)
-    roundCaches.foreach(_.unpersist(blocking = false))
+    roundCaches.foreach(retire)
     out
   }
 
@@ -374,9 +388,10 @@ object Graph {
         .as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"), col("p.w").as("w"))
       .localCheckpoint()
-    val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var dist = seeds.select(col(seedCol).as("v")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint()
+    val roundCaches =
+      scala.collection.mutable.ArrayBuffer[DataFrame](sym, dist)
     var frontier = dist
     var hop = 1
     var done = false
@@ -415,7 +430,7 @@ object Graph {
     }
     // seal + release round caches (same lifecycle as bfsDistances)
     val out = dist.localCheckpoint(true)
-    roundCaches.foreach(_.unpersist(blocking = false))
+    roundCaches.foreach(retire)
     out
   }
 

@@ -254,4 +254,36 @@ class GraphSpec extends AnyFunSuite {
       maxHops = 5).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sp == Map(1L -> 0L, 2L -> 5L, 3L -> 10L))
   }
+
+  test("BFS/SSSP walks return the persisted-RDD census to its baseline") {
+    // every checkpoint a walk takes (symmetrized edges, seeds, hop
+    // deltas, periodic visited seals, SSSP's improved sets) is retired
+    // before it returns; only the returned frame's own checkpoint
+    // stays, and retiring that restores the census. Walks of
+    // 9 hops take the emptiness-probe and periodic-seal paths; walks
+    // of 3 skip them.
+    val sc = spark.sparkContext
+    val chain = (1L to 9L).map(i => (i, i + 1, 1L)).toDF("s", "d", "w")
+    val seeds = Seq(1L).toDF("v0")
+    val walks: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "bfsDistances" -> (h =>
+        Graph.bfsDistances(chain, "s", "d", seeds, "v0", h)),
+      "bfsDistancesLabeled" -> (h =>
+        Graph.bfsDistancesLabeled(chain, "s", "d", seeds, "v0", h)),
+      "ssspBounded" -> (h =>
+        Graph.ssspBounded(chain, "s", "d", "w", seeds, "v0", h)))
+    for ((name, walk) <- walks; hops <- Seq(3, 9)) {
+      // RDDs persisted since `before` (ids, not a count: the
+      // ContextCleaner may drop earlier suites' RDDs meanwhile)
+      val before = sc.getPersistentRDDs.keySet
+      def added: Int = (sc.getPersistentRDDs.keySet -- before).size
+      val out = walk(hops)
+      assert(out.count() == hops + 1L, s"$name($hops)")
+      val held = added
+      assert(held == 1, s"$name($hops) holds $held persisted RDDs")
+      Graph.retire(out)
+      val left = added
+      assert(left == 0, s"$name($hops) left $left after retiring its result")
+    }
+  }
 }
